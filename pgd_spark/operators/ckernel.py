@@ -13,7 +13,9 @@ graphs.
 The shared object is compiled ONCE PER MACHINE with the system C
 compiler into a content-keyed /dev/shm (or tmpdir) path guarded by the
 same lock-dir + done-marker protocol as kernels._shared_state; every
-worker process dlopens the same file.  Hosts without a working C
+worker process dlopens the same file.  A failed compile writes a
+``.failed`` marker (with the compiler's message) that every other
+process on the machine stops on.  Hosts without a working C
 toolchain fall back to the numpy kernels transparently
 (:func:`available` returns False and edge_graphlet_counts keeps its
 old impl choice).
@@ -107,7 +109,12 @@ def _build_lib() -> ctypes.CDLL | None:
     tmp = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     so_path = os.path.join(tmp, f"pgd_ckernel_{token}.so")
     done = so_path + ".done"
+    # a failed compile leaves this marker so every later process on the
+    # machine falls back to numpy at once instead of waiting on the lock
+    failed = so_path + ".failed"
     if not os.path.exists(done):
+        if os.path.exists(failed):
+            return None
         lock = so_path + ".lock"
         try:
             os.mkdir(lock)  # atomic: first process compiles
@@ -121,7 +128,9 @@ def _build_lib() -> ctypes.CDLL | None:
                     capture_output=True,
                     timeout=120,
                 )
-            except (subprocess.SubprocessError, OSError):
+            except (subprocess.SubprocessError, OSError) as e:
+                with open(failed, "wb") as f:
+                    f.write(str(e).encode() + b"\n" + (getattr(e, "stderr", None) or b""))
                 return None
             with open(done, "w") as f:
                 f.write("ok")
@@ -129,6 +138,8 @@ def _build_lib() -> ctypes.CDLL | None:
             for _ in range(300):
                 if os.path.exists(done):
                     break
+                if os.path.exists(failed):
+                    return None
                 time.sleep(0.1)
             else:
                 return None

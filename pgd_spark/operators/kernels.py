@@ -213,18 +213,12 @@ def edge_counts_batch_vec(
     return tri_out, cliq_out, cyc_out
 
 
-# per-worker CSR cache: python workers are reused across tasks, so the
-# CSR is built once per worker (in parallel across the cluster) instead
-# of once serially on the driver — the driver only broadcasts the raw
-# edge arrays.
-_CSR_CACHE: dict[str, tuple] = {}
-
-
 def _oriented_state(src: np.ndarray, dst: np.ndarray, need_member: bool = True):
     """CSR + degree-oriented dense edge arrays + adjacency-membership
-    structures, built once per worker (or once per machine via
-    _shared_state).  ``need_member=False`` (loop kernel) skips the
-    bitmap/packed-key build — the loop's mark array needs neither."""
+    structures, built once per machine via _shared_state (privately
+    by a task that times out waiting for another worker's build).
+    ``need_member=False`` (loop kernel) skips the bitmap/packed-key
+    build — the loop's mark array needs neither."""
     uniq, indptr, indices = build_csr(src, dst)
     deg = indptr[1:] - indptr[:-1]
     n = len(uniq)
@@ -348,11 +342,7 @@ def make_range_kernel(
     token = h.hexdigest()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = _CSR_CACHE.get(token)
-        if state is None:
-            state = _shared_state(token, bc_edges, need_member=(impl == "vec"))
-            _CSR_CACHE.clear()
-            _CSR_CACHE[token] = state
+        state = _shared_state(token, bc_edges, need_member=(impl == "vec"))
         uniq, indptr, indices, ov, ou, deg, adjbm, ekeys_pad = state
         n = len(uniq)
         member = _adjacency_membership(n, adjbm, ekeys_pad) if impl == "vec" else None

@@ -44,14 +44,22 @@ def test_identities_hold_on_arbitrary_graphs(spark, edges):
 def test_skewed_hub_graph_strategy_equality(spark):
     """Hub-heavy graph (star hubs + random tail): both physical
     strategies agree edge-for-edge — skew handling changes plans,
-    never results."""
+    never results.  The graph is fed twice: normalized (shuffled edge
+    order), and canonical with its edges sorted by src, so every hub
+    edge sits in one contiguous block of the arrays the broadcast
+    strategy collects (one task per core over contiguous id ranges of
+    the hash-permuted oriented edges)."""
     import random
 
     rng = random.Random(5)
     edges = [(0, i) for i in range(1, 120)]           # hub 0
     edges += [(1, i) for i in range(60, 180)]          # hub 1 overlapping
     edges += [(rng.randrange(2, 180), rng.randrange(2, 180)) for _ in range(300)]
-    g = make_graph(spark, edges)
-    a = sorted(map(tuple, edge_graphlet_counts(g, "broadcast").collect()))
-    b = sorted(map(tuple, edge_graphlet_counts(g, "distributed").collect()))
-    assert a == b
+    canon = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
+    hub_sorted = spark.createDataFrame(canon, "src long, dst long")
+    assert [tuple(r) for r in hub_sorted.toPandas().itertuples(index=False)] == canon
+    for g in (make_graph(spark, edges), Graph(hub_sorted, already_canonical=True)):
+        a = sorted(map(tuple, edge_graphlet_counts(g, "broadcast").collect()))
+        b = sorted(map(tuple, edge_graphlet_counts(g, "distributed").collect()))
+        assert len(a) == len(canon)
+        assert a == b
